@@ -2,12 +2,13 @@
 
 One traced run reports every per-layer metric: it traces the named workload
 (in the session its untraced runs just used), then every other workload once
-(the trace-only dedup workload after its output check), then times the
-Python kernels in-process with no Spark in the loop.
+after its output check, then times the Python kernels in-process with no
+Spark in the loop.
 """
 
 from __future__ import annotations
 
+import json
 import statistics
 import time
 
@@ -122,14 +123,17 @@ def per_layer(spark, named, untraced_wall: float, seed: int, work: str,
     for wl in [named] + others:
         name, ref = wl.name, None
         if wl is not named:
+            # checked here, as no timed run of this invocation checks it;
+            # the check is also its cold first execution, so every traced
+            # pass is a warm one, as the named workload's is
             wl.setup()
-        if name in workloads.TRACE_ONLY:
-            # checked here, as no timed run checks it
             try:
                 ref = wl.check()
             except workloads.CheckFailed as e:
                 log(f"output check failed: {e}")
                 correct = False
+            print(json.dumps(workloads.facts_line(wl)), flush=True)
+            log(f"checked {name}: output {ref}")
         tracer.prefix = name
         t0 = time.perf_counter()
         fp = wl.traced(tracer)

@@ -1,7 +1,7 @@
 """Seeded BAL benchmark: one workload per invocation, closed loop, one
 driver process at local[<cores>].
 
-    python3 perfbench/run.py --workload address_bal --seed 1 --seconds 10 \
+    python3 perfbench/run.py --workload veg_factors --seed 1 --seconds 15 \
         --trace 0
 
 Run from the repository root. Prints progress to stderr and, as the last
@@ -27,12 +27,20 @@ import traceback
 ROOT = os.getcwd()
 WORK = os.path.join(ROOT, ".perfbench_work")
 SETUP_REPEATS = 3
-# the first timed run still warms up, so one run is no median
-MIN_RUNS = 2
+# the first runs after the cold check still warm up (JIT, codegen, the
+# Python workers' memos): they run, and are checked, untimed
+WARM_SECONDS = 5
+# a median of at least three timed runs
+MIN_RUNS = 3
+
+
+T_START = time.perf_counter()
 
 
 def log(*args):
-    print(*args, file=sys.stderr, flush=True)
+    """Progress to stderr, stamped with the seconds since start."""
+    print(f"[{time.perf_counter() - T_START:6.1f} s]", *args,
+          file=sys.stderr, flush=True)
 
 
 def _tree_rss(root_pid: int) -> dict:
@@ -168,25 +176,31 @@ def warm_up(spark):
 
 
 def timed_loop(wl, ref, seconds: float):
-    """Closed loop for ``seconds``, and at least MIN_RUNS runs: (walls,
-    attempted, failed, high-water RSS of each run)."""
-    walls, attempted, failed = [], 0, 0
+    """Warm-up runs for WARM_SECONDS (at least one), then a closed loop for
+    ``seconds`` and at least MIN_RUNS runs: (walls, attempted, failed,
+    high-water RSS of each run), walls and RSS of the timed runs only.
+    Every run is checked; warm-up runs count in attempted and failed."""
+    attempted, failed = 0, 0
     with PeakRss() as rss:
-        t_end = time.perf_counter() + seconds
-        while len(walls) < MIN_RUNS or time.perf_counter() < t_end:
-            attempted += 1
-            t0 = time.perf_counter()
-            try:
-                fp = wl.run()
-            except Exception:  # a failed run counts, the loop goes on
-                log(f"run {attempted} raised:\n{traceback.format_exc()}")
-                failed += 1
-                fp = None
-            walls.append(time.perf_counter() - t0)
-            rss.next_run()
-            if fp is not None and fp != ref:
-                log(f"run {attempted}: output {fp} != checked {ref}")
-                failed += 1
+        for phase_s, min_runs in ((WARM_SECONDS, 1), (seconds, MIN_RUNS)):
+            walls = []
+            rss.run_peaks.clear()
+            t_end = time.perf_counter() + phase_s
+            while len(walls) < min_runs or time.perf_counter() < t_end:
+                attempted += 1
+                t0 = time.perf_counter()
+                try:
+                    fp = wl.run()
+                except Exception:  # a failed run counts, the loop goes on
+                    log(f"run {attempted} raised:\n"
+                        f"{traceback.format_exc()}")
+                    failed += 1
+                    fp = None
+                walls.append(time.perf_counter() - t0)
+                rss.next_run()
+                if fp is not None and fp != ref:
+                    log(f"run {attempted}: output {fp} != checked {ref}")
+                    failed += 1
     return walls, attempted, failed, rss.run_peaks
 
 
@@ -238,11 +252,9 @@ def main():
             log(f"output check raised:\n{traceback.format_exc()}")
             correct = False
         log(f"checked output {ref}; {wl.item}: {wl.items}")
-        print(json.dumps({"workload": a.workload, "seed": a.seed,
-                          "inputs": wl.facts, "setup_s": {
-                              "session": session_s, "warm_up": warm_s,
-                              "inputs": gen},
-                          **workloads.engine_facts(wl)}), flush=True)
+        print(json.dumps({**workloads.facts_line(wl), "setup_s": {
+            "session": session_s, "warm_up": warm_s, "inputs": gen}}),
+              flush=True)
 
         walls, attempted, failed, peaks = timed_loop(wl, ref, a.seconds)
         wall = statistics.median(walls)
