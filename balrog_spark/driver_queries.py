@@ -522,7 +522,7 @@ def r4_slope_aspect(spark, sf_dir):
         StructField("aspect_class", LongType(), False),
     ])
 
-    def compute(key, pdf: pd.DataFrame):
+    def compute(key, pdf):
         rmax = int(pdf.r.max())
         grid = np.zeros((rmax + 1, _GRID_W), dtype=np.float64)
         grid[pdf.r.values, pdf.c.values] = (
@@ -606,7 +606,7 @@ def r4_slope_aspect_tiled(spark, sf_dir):
         StructField("ncols", IntegerType(), False),
         StructField("data", ArrayType(FloatType()), False)])
 
-    def pack(key, pdf: pd.DataFrame):
+    def pack(key, pdf):
         tx, ty = int(key[0]), int(key[1])
         arr = np.zeros((TR, TC), dtype=np.float64)
         lr = (pdf.r.values % TR).astype(int)
@@ -690,7 +690,7 @@ def s10_regrid(spark, sf_dir):
         StructField("ncols", IntegerType(), False),
         StructField("data", ArrayType(FloatType()), False)])
 
-    def pack(key, pdf: pd.DataFrame):
+    def pack(key, pdf):
         tx, ty = int(key[0]), int(key[1])
         arr = np.zeros((TR, TC), dtype=np.float64)
         lr = (pdf.r.values % TR).astype(int)
@@ -1848,7 +1848,7 @@ def r3_extract_mask(spark, sf_dir):
     # build one tile row from the grid (applyInPandas single group)
     from .schema import TILES
 
-    def to_tile(key, pdf: pd.DataFrame):
+    def to_tile(key, pdf):
         grid = np.full((nrows, _GRID_W), -99.0)
         # row 0 = north edge: r ascending = southward
         grid[pdf.r.values, pdf.c.values] = pdf.v.values
@@ -2429,7 +2429,7 @@ def _events_class_tiles(spark, sf_dir, TR=10, TC=25, px=25.0,
         StructField("ncols", IntegerType(), False),
         StructField("data", ArrayType(FloatType()), False)])
 
-    def pack(key, pdf: pd.DataFrame):
+    def pack(key, pdf):
         tx, ty = int(key[0]), int(key[1])
         arr = np.zeros((TR, TC), dtype=np.float64)
         lr = (pdf.r.values % TR).astype(int)
@@ -2848,7 +2848,7 @@ def _flag_dem_tiles(spark, sf_dir):
         StructField("ncols", IntegerType(), False),
         StructField("data", ArrayType(FloatType()), False)])
 
-    def pack(key, pdf: pd.DataFrame):
+    def pack(key, pdf):
         tx, ty = int(key[0]), int(key[1])
         arr = np.zeros((T, T), dtype=np.float64)
         lr = (pdf.r.values % T).astype(int)

@@ -88,8 +88,8 @@ def _rings_wkt(rings) -> str:
         pts = r
         if not np.array_equal(pts[0], pts[-1]):
             pts = np.vstack([pts, pts[:1]])
-        body.append("(" + ", ".join(f"{x:.6f} {y:.6f}" for x, y in pts)
-                    + ")")
+        body.append("(" + ", ".join(f"{x:.6f} {y:.6f}"
+                                    for x, y in pts.tolist()) + ")")
     return "(" + ", ".join(body) + ")"
 
 
@@ -108,7 +108,7 @@ def multipolygon_wkt_polys(polys) -> str:
 
 
 def _closed(ring: np.ndarray) -> np.ndarray:
-    if np.array_equal(ring[0], ring[-1]) and len(ring) > 1:
+    if len(ring) > 1 and np.array_equal(ring[0], ring[-1]):
         return ring[:-1]
     return ring
 
@@ -155,8 +155,9 @@ def ring_area(ring) -> float:
     """Shoelace area (absolute)."""
     ring = _closed(np.asarray(ring, dtype=np.float64))
     x, y = ring[:, 0], ring[:, 1]
-    return float(abs(np.dot(x, np.roll(y, -1)) - np.dot(y, np.roll(x, -1)))
-                 / 2.0)
+    # np.roll(v, -1), without its per-call overhead
+    return float(abs(np.dot(x, np.concatenate((y[1:], y[:1])))
+                     - np.dot(y, np.concatenate((x[1:], x[:1])))) / 2.0)
 
 
 def ring_centroid(ring):
@@ -390,13 +391,41 @@ def _slab_crossings(S: np.ndarray, pid: np.ndarray, xm: float):
     return yc, pid[cross]
 
 
-def clip_ring_to_convex(ring, clip_ring):
-    """Sutherland-Hodgman clip of an arbitrary simple ring against a CONVEX
-    clip polygon — the general V12 polygon∩polygon primitive for convex
-    clips (address buffers are convex by construction, reference:
+def pad_rings(rings):
+    """List of rings -> ((N, V, 2) zero-padded vertex array, (N,) vertex
+    counts), each ring without its closing duplicate vertex — the layout
+    :func:`clip_rings_to_convex` takes and returns."""
+    rings = [_closed(np.asarray(r, dtype=np.float64)) for r in rings]
+    counts = np.fromiter((len(r) for r in rings), np.int64, len(rings))
+    out = np.zeros((len(rings), int(counts.max(initial=0)), 2))
+    for i, r in enumerate(rings):
+        out[i, :len(r)] = r
+    return out, counts
+
+
+def ring_bboxes(verts, counts):
+    """[xmin, ymin, xmax, ymax] of every ring of a padded vertex array
+    (:func:`pad_rings` layout); the masked min/max are exact."""
+    pad = (np.arange(verts.shape[1]) >= counts[:, None])[..., None]
+    lo = np.where(pad, np.inf, verts).min(axis=1, initial=np.inf)
+    hi = np.where(pad, -np.inf, verts).max(axis=1, initial=-np.inf)
+    return np.concatenate([lo, hi], axis=1).tolist()
+
+
+def clip_rings_to_convex(subj, counts, clips):
+    """Sutherland-Hodgman clip of N rings at once, each against its own
+    CONVEX clip ring — the general V12 polygon∩polygon primitive for
+    convex clips (address buffers are convex by construction, reference:
     data_prep/vegetation/xx_fiona_testing.py:139 buffer.intersection).
-    Clip orientation is normalized to CCW internally. Returns the clipped
-    ring vertices (possibly empty).
+
+    ``subj`` (N, V, 2) holds ring i in its first ``counts[i]`` rows (see
+    :func:`pad_rings`); ``clips`` (N, C, 2) holds the open clip rings,
+    all with the same vertex count C >= 3. Clip orientation is
+    normalized to CCW per ring. Returns (vertices, counts) in the same
+    padded layout; a count of 0 is an empty clip. Each output vertex
+    comes out of the textbook scalar loop's float operations in the
+    same order, vectorized over rings and vertices, so a batch of N
+    gives bit-identical vertices to N single-ring calls.
 
     EXACT ONLY FOR CONVEX SUBJECTS (convex ∩ convex is a single convex
     piece). For a CONCAVE subject whose intersection is disconnected,
@@ -405,60 +434,86 @@ def clip_ring_to_convex(ring, clip_ring):
     tests/test_geometry_clip.py) — route concave subjects to
     :func:`clip_polys_general` instead; :func:`ring_is_convex` is the
     dispatch test."""
+    poly = np.asarray(subj, dtype=np.float64)
+    n = np.asarray(counts, dtype=np.int64)
+    clips = np.asarray(clips, dtype=np.float64)
+    x, y = clips[..., 0], clips[..., 1]
+    # signed shoelace: negative -> CW -> reverse to CCW
+    cw = ((x * np.roll(y, -1, axis=1)).sum(axis=1)
+          - (y * np.roll(x, -1, axis=1)).sum(axis=1)) < 0
+    if cw.any():
+        clips = clips.copy()
+        clips[cw] = clips[cw, ::-1]
+    # clip edge k of every ring: start a, direction e = b - a, (N, 1) each
+    a = clips.transpose(1, 2, 0)[..., None]
+    e = np.roll(clips, -1, axis=1).transpose(1, 2, 0)[..., None] - a
+    rows = np.arange(len(n))[:, None]
+    with np.errstate(all="ignore"):
+        for (ax, ay), (ex, ey) in zip(a, e):
+            if poly.shape[1] == 0:
+                break
+            j = np.arange(poly.shape[1])[None, :]
+            valid = j < n[:, None]
+            cx, cy = poly[..., 0], poly[..., 1]
+            cin = ex * (cy - ay) - ey * (cx - ax) >= 0
+            if (cin | ~valid).all():
+                continue  # every vertex is inside: this edge keeps all
+            nxt = np.where(j + 1 < n[:, None], j + 1, 0)
+            nin = cin[rows, nxt]
+            # segment cur->nxt crosses the clip edge's line: parametric t
+            # along it where cross(e, p - a) == 0
+            dx, dy = cx[rows, nxt] - cx, cy[rows, nxt] - cy
+            t = (ey * (cx - ax) - ex * (cy - ay)) / (ex * dy - ey * dx)
+            xi = np.stack([cx + t * dx, cy + t * dy], axis=-1)
+            # per input vertex: cur if inside, then the crossing if the
+            # edge leaves or enters the half-plane
+            cnt = np.where(valid, cin.astype(np.int64) + (cin != nin), 0)
+            pos = np.cumsum(cnt, axis=1) - cnt
+            n = cnt.sum(axis=1)
+            out = np.zeros((len(n), int(n.max(initial=0)), 2))
+            r1, c1 = np.nonzero(cnt >= 1)
+            out[r1, pos[r1, c1]] = np.where(cin[..., None], poly,
+                                            xi)[r1, c1]
+            r2, c2 = np.nonzero(cnt == 2)
+            out[r2, pos[r2, c2] + 1] = xi[r2, c2]
+            poly = out
+    return poly, n
+
+
+def clip_ring_to_convex(ring, clip_ring):
+    """One ring against one convex clip ring: the N=1 case of
+    :func:`clip_rings_to_convex` (same exactness caveat — convex
+    subjects only). Returns the clipped ring vertices (possibly
+    empty)."""
     clip = _closed(np.asarray(clip_ring, dtype=np.float64))
     if len(clip) < 3:
         return np.empty((0, 2))
-    # signed shoelace: negative -> CW -> reverse to CCW
-    x, y = clip[:, 0], clip[:, 1]
-    if (np.dot(x, np.roll(y, -1)) - np.dot(y, np.roll(x, -1))) < 0:
-        clip = clip[::-1]
-    poly = _closed(np.asarray(ring, dtype=np.float64)).tolist()
-    for k in range(len(clip)):
-        if not poly:
-            return np.empty((0, 2))
-        ax, ay = clip[k]
-        bx, by = clip[(k + 1) % len(clip)]
-        ex, ey = bx - ax, by - ay
-        out = []
-        n = len(poly)
-        for i in range(n):
-            cur, nxt = poly[i], poly[(i + 1) % n]
-            cin = ex * (cur[1] - ay) - ey * (cur[0] - ax) >= 0
-            nin = ex * (nxt[1] - ay) - ey * (nxt[0] - ax) >= 0
-            if cin != nin:
-                # segment crosses the clip edge's line: parametric t along
-                # cur->nxt where cross(e, p - a) == 0
-                dx, dy = nxt[0] - cur[0], nxt[1] - cur[1]
-                denom = ex * dy - ey * dx
-                t = (ey * (cur[0] - ax) - ex * (cur[1] - ay)) / denom
-                xi = [cur[0] + t * dx, cur[1] + t * dy]
-            if cin:
-                out.append(cur)
-                if not nin:
-                    out.append(xi)
-            elif nin:
-                out.append(xi)
-        poly = out
-    return np.array(poly) if poly else np.empty((0, 2))
+    out, n = clip_rings_to_convex(*pad_rings([ring]), clip[None])
+    return out[0, :n[0]] if n[0] else np.empty((0, 2))
 
 
 def clip_polys_to_convex(polys, clip_ring):
     """Clip a holed multipolygon (list of [exterior, hole, ...] ring lists)
     against a convex clip ring: every ring is SH-clipped independently
-    (even-odd semantics survive intersection with a convex region). Parts
-    whose clipped exterior is degenerate are dropped; degenerate clipped
-    holes are dropped from their part. Returns the same polys structure."""
-    out = []
-    for rings in polys:
-        ext = clip_ring_to_convex(rings[0], clip_ring)
+    (even-odd semantics survive intersection with a convex region), all
+    in one :func:`clip_rings_to_convex` batch. Parts whose clipped
+    exterior is degenerate are dropped; degenerate clipped holes are
+    dropped from their part. Returns the same polys structure."""
+    clip = _closed(np.asarray(clip_ring, dtype=np.float64))
+    rings = [r for part in polys for r in part]
+    if len(clip) < 3 or not rings:
+        return []
+    verts, n = clip_rings_to_convex(
+        *pad_rings(rings), np.broadcast_to(clip, (len(rings),) + clip.shape))
+    clipped = [verts[i, :n[i]] for i in range(len(rings))]
+    out, i = [], 0
+    for part in polys:
+        ext, holes = clipped[i], clipped[i + 1:i + len(part)]
+        i += len(part)
         if len(ext) < 3 or ring_area(ext) <= 0.0:
             continue
-        piece = [ext]
-        for hole in rings[1:]:
-            hc = clip_ring_to_convex(hole, clip_ring)
-            if len(hc) >= 3 and ring_area(hc) > 0.0:
-                piece.append(hc)
-        out.append(piece)
+        out.append([ext] + [h for h in holes
+                            if len(h) >= 3 and ring_area(h) > 0.0])
     return out
 
 

@@ -782,6 +782,7 @@ def knn_join(points: DataFrame, polys: DataFrame = None,
             NY = [np.zeros(n) for _ in range(k_slots)]
             AZ = [np.zeros(n) for _ in range(k_slots)]
             slots = [D, VEG, BAL, NX, NY, AZ]
+            empty = [np.inf, None, np.nan, 0.0, 0.0, 0.0]
             for pdf in batches:
                 for r in pdf.itertuples():
                     geom = _geom_of(r.wkt)
@@ -799,6 +800,21 @@ def knn_join(points: DataFrame, polys: DataFrame = None,
                         else float(bal)
                     cand = [d, np.full(n, r.veg_id, dtype=object),
                             np.full(n, bal), nx_, ny_, az]
+                    # one slot per veg: another WKT row of a veg that
+                    # already holds a point's slot must not take a second
+                    # one (it would crowd out the true next neighbour) —
+                    # a closer row vacates that slot and is re-inserted
+                    # below, a farther one is dropped
+                    for i in range(k_slots):
+                        same = VEG[i] == r.veg_id
+                        if not same.any():
+                            continue
+                        closer = same & (cand[0] < D[i])
+                        cand[0] = np.where(same & ~closer, np.inf, cand[0])
+                        if closer.any():
+                            for S, e in zip(slots, empty):
+                                S[i:] = [np.where(closer, a, b) for a, b
+                                         in zip(S[i + 1:] + [e], S[i:])]
                     for i in range(k_slots):
                         better = cand[0] < D[i]
                         # finite ties only: an inf "tie" is two empty

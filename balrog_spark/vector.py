@@ -298,7 +298,7 @@ def dissolve_union(polys: DataFrame, class_col: str = "bal_number",
     # ~ms per GROUP in Arrow stream overhead (and AQE may coalesce the tiny
     # shuffle onto one task), so per-cell groups don't amortize; cells are
     # iterated inside the batch (the zonal/raster supertile trick)
-    def cell_union(key, pdf: pd.DataFrame):
+    def cell_union(key, pdf):
         rows = []
         for (cls, cell), grp in pdf.groupby(["cls", "cell_id"],
                                             sort=False):
@@ -352,7 +352,7 @@ def dissolve(polys: DataFrame, class_col: str = "bal_number",
     with_cell = polys.select(
         cls.alias("cls"), F.col(wkt_col).alias("wkt"))
 
-    def partial(key, pdf: pd.DataFrame):
+    def partial(key, pdf):
         rings = []
         for w in pdf.wkt.values:
             rings.extend(geometry.parse_wkt(w))
@@ -379,7 +379,7 @@ def dissolve(polys: DataFrame, class_col: str = "bal_number",
         StructField("area_m2", DoubleType(), False),
         StructField("wkt", StringType(), True)])
 
-    def final(key, pdf: pd.DataFrame):
+    def final(key, pdf):
         n = int(pdf.pn.sum())
         area = float(pdf.pa.sum())
         wkt = None

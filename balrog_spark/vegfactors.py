@@ -15,10 +15,15 @@ Engine shape (Spark-first):
 
 1. candidate pairs via the dwithin cover equi-join (radius-padded cell
    cover, broadcast or shuffle by byte estimate — joins.polygon_cover);
-2. ONE mapInPandas pass per candidate batch does the geometry: convex
-   Sutherland-Hodgman clip of every polygon part (+holes) against the
-   address's buffer polygon (geometry.clip_polys_to_convex), exact area,
-   nearest point / distance / azimuth / line WKT, clip WKT + bbox columns;
+2. ONE mapInPandas pass per candidate batch does the geometry: rows are
+   grouped by polygon (groupby("wkt").indices) and each part's distance
+   and PIP run vectorized over its candidate rows; every (row, convex
+   hole-free part) pair that can reach the buffer is then clipped in ONE
+   batched Sutherland-Hodgman pass against the rows' buffer polygons
+   (geometry.clip_rings_to_convex), while concave or holed parts take the
+   exact slab clip (geometry.clip_polys_general) pair by pair; per piece:
+   exact area, nearest point / distance / azimuth / line WKT, clip WKT +
+   bbox columns;
 3. per-clip zonal medians run through zonal.zonal_stats_poly — the bbox
    columns keep its tile join and window crop in codegen, the shuffle
    ships cropped windows only.
@@ -106,98 +111,111 @@ def veg_factors(points: DataFrame, polys: DataFrame = None,
 
     def refine(batches):
         for pdf in batches:
-            out = {c: [] for c in cols}
-            for wkt, grp in pdf.groupby("wkt", sort=False):
+            xs_all = pdf["x"].to_numpy(np.float64)
+            ys_all = pdf["y"].to_numpy(np.float64)
+            addr, vid = pdf["addr_id"].to_numpy(), pdf["veg_id"].to_numpy()
+            bal = pdf["bal_number"].to_numpy()
+            # pass 1, per polygon: part geometry VECTORIZED over its
+            # candidate rows (the padded cover join admits ~cell_m-scale
+            # neighbours; only true within-radius pairs can clip non-empty
+            # since the buffer polygon is inscribed in the radius circle)
+            # collects every (row, part) pair that can reach the buffer,
+            # in (first appearance of the polygon, row, part) order
+            pairs = []   # (row, part_idx, rings, subject, d, nx, ny, ins)
+            subjects = []  # exterior rings of the convex hole-free parts
+            groups = pdf.groupby("wkt", sort=False).indices
+            for wkt, idx in sorted(groups.items(), key=lambda g: g[1][0]):
                 parts = joins._geom_of(wkt)
-                xs, ys = grp.x.values, grp.y.values
-                addr = grp.addr_id.values
-                vid = grp.veg_id.values
-                bal = grp.bal_number.values
-                # per-part geometry VECTORIZED over the whole candidate
-                # group (the padded cover join admits ~cell_m-scale
-                # neighbours; only true within-radius pairs can clip
-                # non-empty since the buffer polygon is inscribed in the
-                # radius circle): the per-pair Python clip below then runs
-                # only on real intersections
+                xs, ys = xs_all[idx], ys_all[idx]
                 pre = []
-                keep = np.zeros(len(grp), dtype=bool)
-                # convexity is a property of the PART, not the pair —
-                # decide the clip dispatch once per part, never inside
-                # the per-point loop
-                part_convex = [
-                    len(rings) == 1 and geometry.ring_is_convex(rings[0])
-                    for rings in parts]
+                keep = np.zeros(len(idx), dtype=bool)
                 for rings in parts:
                     d, nx, ny = geometry.points_to_polygon_distance(
                         xs, ys, rings)
                     ins = geometry.points_in_polygon(xs, ys, rings)
-                    pre.append((d, nx, ny, ins))
+                    # SH is exact only for CONVEX subjects (convex ∩
+                    # convex stays one convex piece); a concave or holed
+                    # part whose buffer intersection is disconnected would
+                    # get bridged wrong by SH, so those take the exact
+                    # slab clip (subject -1). Convexity is a property of
+                    # the PART, decided once per part
+                    subj = -1
+                    if len(rings) == 1 \
+                            and geometry.ring_is_convex(rings[0]):
+                        subj = len(subjects)
+                        subjects.append(rings[0])
+                    pre.append((d, nx, ny, ins, subj))
                     keep |= ins | (d <= radius_m)
                 for k in np.nonzero(keep)[0]:
-                    x, y = float(xs[k]), float(ys[k])
-                    buf = geometry.buffer_point(x, y, radius_m, quad_segs)
-                    for pi, rings in enumerate(parts):
-                        d_p, nx_p, ny_p, ins_p = pre[pi]
-                        if not ins_p[k] and d_p[k] > radius_m:
+                    for pi, (d, nx, ny, ins, subj) in enumerate(pre):
+                        if not ins[k] and d[k] > radius_m:
                             continue  # this part cannot reach the buffer
-                        # SH is exact only for CONVEX subjects (convex ∩
-                        # convex stays one convex piece); a concave or
-                        # holed part whose buffer intersection is
-                        # disconnected would get bridged wrong by SH, so
-                        # those dispatch to the exact slab clip
-                        if part_convex[pi]:
-                            pieces = geometry.clip_polys_to_convex(
-                                [rings], buf)
-                        else:
-                            pieces = geometry.clip_polys_general(
-                                [rings], [[buf]])
-                        if not pieces:
-                            continue
-                        area = sum(geometry.polygon_area(p)
-                                   for p in pieces)
-                        if area <= 0.0:
-                            continue
-                        if ins_p[k]:
-                            d, nx, ny, az = 0.0, x, y, 0.0
-                        elif d_p[k] < inradius:
-                            d, nx, ny = float(d_p[k]), float(nx_p[k]), \
-                                float(ny_p[k])
-                            az = float(geometry.azimuth_deg(x, y, nx, ny))
-                        else:  # annulus band: exact distance to the clip
-                            dd, nxa, nya = \
-                                geometry.points_to_geom_distance(
-                                    np.array([x]), np.array([y]), pieces)
-                            d, nx, ny = float(dd[0]), float(nxa[0]), \
-                                float(nya[0])
-                            az = float(geometry.azimuth_deg(x, y, nx, ny))
-                        boxes = [geometry.bbox(p[0]) for p in pieces]
-                        bx0 = min(b[0] for b in boxes)
-                        by0 = min(b[1] for b in boxes)
-                        bx1 = max(b[2] for b in boxes)
-                        by1 = max(b[3] for b in boxes)
-                        out["addr_id"].append(addr[k])
-                        out["veg_id"].append(vid[k])
-                        b = bal[k]
-                        out["bal_number"].append(
-                            None if b is None or pd.isna(b)
-                            else int(b))
-                        out["part_idx"].append(pi)
-                        out["area_m2"].append(area)
-                        out["distance_m"].append(d)
-                        out["azimuth_deg"].append(az)
-                        out["near_x"].append(nx)
-                        out["near_y"].append(ny)
-                        out["xmin"].append(bx0)
-                        out["ymin"].append(by0)
-                        out["xmax"].append(bx1)
-                        out["ymax"].append(by1)
-                        out["clip_wkt"].append(
-                            geometry.polygon_wkt_rings(pieces[0])
-                            if len(pieces) == 1 else
-                            geometry.multipolygon_wkt_polys(pieces))
-                        out["line_wkt"].append(
-                            "LINESTRING (%.6f %.6f, %.6f %.6f)"
-                            % (x, y, nx, ny))
+                        pairs.append((idx[k], pi, parts[pi], subj, d[k],
+                                      nx[k], ny[k], ins[k]))
+            # pass 2: ONE batched SH clip of every convex pair against its
+            # address buffer
+            rows = np.fromiter((p[0] for p in pairs), np.int64, len(pairs))
+            subj_of = np.fromiter((p[3] for p in pairs), np.int64,
+                                  len(pairs))
+            bufs = geometry.buffer_points_vec(xs_all[rows], ys_all[rows],
+                                              radius_m, quad_segs)
+            sh = np.nonzero(subj_of >= 0)[0]
+            sh_of = np.full(len(pairs), -1)
+            sh_of[sh] = np.arange(len(sh))
+            sv, sn = geometry.pad_rings(subjects)
+            verts, nv = geometry.clip_rings_to_convex(
+                sv[subj_of[sh]], sn[subj_of[sh]], bufs[sh])
+            sh_box = geometry.ring_bboxes(verts, nv)
+            # pass 3: per pair, area, distance and the output row
+            out = {c: [] for c in cols}
+            for p, (row, pi, rings, _, d_p, nx_p, ny_p, ins_p) in \
+                    enumerate(pairs):
+                j = sh_of[p]
+                if j >= 0:
+                    ext = verts[j, :nv[j]]
+                    area = geometry.ring_area(ext) if len(ext) >= 3 else 0.0
+                    pieces = [[ext]]
+                    box = sh_box[j]
+                else:
+                    pieces = geometry.clip_polys_general([rings],
+                                                         [[bufs[p]]])
+                    area = sum(geometry.polygon_area(q) for q in pieces)
+                    box = None
+                if area <= 0.0:
+                    continue
+                x, y = float(xs_all[row]), float(ys_all[row])
+                if ins_p:
+                    d, nx, ny, az = 0.0, x, y, 0.0
+                elif d_p < inradius:
+                    d, nx, ny = float(d_p), float(nx_p), float(ny_p)
+                    az = float(geometry.azimuth_deg(x, y, nx, ny))
+                else:  # annulus band: exact distance to the clip
+                    dd, nxa, nya = geometry.points_to_geom_distance(
+                        np.array([x]), np.array([y]), pieces)
+                    d, nx, ny = float(dd[0]), float(nxa[0]), float(nya[0])
+                    az = float(geometry.azimuth_deg(x, y, nx, ny))
+                if box is None:
+                    v = np.concatenate([q[0] for q in pieces])
+                    box = v.min(axis=0).tolist() + v.max(axis=0).tolist()
+                b = bal[row]
+                out["addr_id"].append(addr[row])
+                out["veg_id"].append(vid[row])
+                out["bal_number"].append(
+                    None if b is None or pd.isna(b) else int(b))
+                out["part_idx"].append(pi)
+                out["area_m2"].append(area)
+                out["distance_m"].append(d)
+                out["azimuth_deg"].append(az)
+                out["near_x"].append(nx)
+                out["near_y"].append(ny)
+                for c, v in zip(("xmin", "ymin", "xmax", "ymax"), box):
+                    out[c].append(v)
+                out["clip_wkt"].append(
+                    geometry.polygon_wkt_rings(pieces[0])
+                    if len(pieces) == 1 else
+                    geometry.multipolygon_wkt_polys(pieces))
+                out["line_wkt"].append(
+                    "LINESTRING (%.6f %.6f, %.6f %.6f)" % (x, y, nx, ny))
             yield pd.DataFrame(
                 {c: (pd.array(v, dtype="Int64")
                      if c == "bal_number" else v)

@@ -5,6 +5,7 @@ identical rows — the mode cutover is a pure performance decision, so a
 scale change (which flips the budget) must never change results."""
 
 import pytest
+from pyspark import SparkContext
 from pyspark.sql import functions as F
 
 from balrog_spark import joins
@@ -66,3 +67,38 @@ def test_knn_modes_identical(world, k, monkeypatch):
     monkeypatch.setattr(joins, "STRAGGLER_DIRECT_MAX", 50)
     doubling = _canon(joins.knn_join(pts, polys, max_ring=1, k=k), k)
     assert doubling == direct
+
+
+def _box(x1, y1, x2, y2):
+    return (f"POLYGON (({x1} {y1}, {x2} {y1}, {x2} {y2}, {x1} {y2}, "
+            f"{x1} {y1}))")
+
+
+@pytest.mark.parametrize("one_partition", [True, False])
+def test_knn_multirow_veg_keeps_k_distinct(spark, one_partition,
+                                           monkeypatch):
+    """A veg stored as two WKT rows (multipart-as-rows) must hold one
+    k-slot, not two: at k=2 its second row may not crowd the true
+    2nd-nearest veg out of a task's partial top-k. With one partition
+    (what local[1] gives) all rows share one task — the placement the
+    direct mode got wrong."""
+    if one_partition:
+        monkeypatch.setattr(SparkContext, "defaultParallelism",
+                            property(lambda self: 1))
+    pts = spark.createDataFrame([("p", 0.0, 0.0)],
+                                "addr_id STRING, x DOUBLE, y DOUBLE")
+    polys = spark.createDataFrame(
+        [("v1", 1, _box(10, -5, 15, 5)),    # 10 m east
+         ("v1", 1, _box(20, -5, 25, 5)),    # 20 m east, same veg
+         ("v2", 2, _box(-60, -5, -50, 5))],  # 50 m west
+        "veg_id STRING, bal_number BIGINT, wkt STRING")
+
+    def ranked():
+        rows = joins.knn_join(pts, polys, max_ring=8, k=2).collect()
+        return [(r.veg_id, r.distance_m)
+                for r in sorted(rows, key=lambda r: r.nn_rank)]
+
+    want = [("v1", 10.0), ("v2", 50.0)]
+    assert ranked() == want                     # direct mode
+    monkeypatch.setattr(joins, "DIRECT_PAIR_BUDGET", 1)
+    assert ranked() == want                     # scheduled-ring path

@@ -5,6 +5,7 @@ against either an independent brute-force implementation or an exact
 mathematical identity (area partition, integer-grid counting)."""
 
 import numpy as np
+import pandas as pd
 from hypothesis import given, settings, strategies as st
 
 from balrog_spark import cells, geometry
@@ -263,3 +264,162 @@ def test_union_area_exact_with_holes_on_integer_grid(polys):
             cover[hx0 + 20:hx1 + 20, hy0 + 20:hy1 + 20] = False
         grid |= cover
     assert np.isclose(got, float(grid.sum()), rtol=0, atol=1e-6)
+
+
+# --- batched Sutherland-Hodgman clip ---------------------------------------
+
+def _sh_scalar(subject, clip):
+    """Textbook Sutherland-Hodgman, one vertex at a time in Python floats:
+    clip ring made CCW, then per clip edge keep the vertices on its left
+    (cross >= 0) and add the crossing where an edge changes side."""
+    clip = [(float(x), float(y)) for x, y in clip]
+    m = len(clip)
+    if sum(clip[i][0] * clip[(i + 1) % m][1]
+           - clip[(i + 1) % m][0] * clip[i][1] for i in range(m)) < 0:
+        clip = clip[::-1]
+    poly = [(float(x), float(y)) for x, y in subject]
+    for k in range(m):
+        ax, ay = clip[k]
+        bx, by = clip[(k + 1) % m]
+        ex, ey = bx - ax, by - ay
+        out = []
+        for i in range(len(poly)):
+            (cx, cy), (nx, ny) = poly[i], poly[(i + 1) % len(poly)]
+            cin = ex * (cy - ay) - ey * (cx - ax) >= 0
+            nin = ex * (ny - ay) - ey * (nx - ax) >= 0
+            if cin != nin:
+                dx, dy = nx - cx, ny - cy
+                t = (ey * (cx - ax) - ex * (cy - ay)) / (ex * dy - ey * dx)
+                xi = (cx + t * dx, cy + t * dy)
+            if cin:
+                out.append((cx, cy))
+                if not nin:
+                    out.append(xi)
+            elif nin:
+                out.append(xi)
+        poly = out
+    return np.array(poly).reshape(-1, 2)
+
+
+small = st.integers(min_value=-6, max_value=6)
+
+
+@st.composite
+def sh_subjects(draw, clip):
+    """Integer boxes (vertices exactly on the clip edges' lines), boxes
+    with collinear runs (every edge split at its midpoint), far-off
+    boxes (wholly outside), tiny stars at the clip's vertex mean
+    (wholly inside) and general stars."""
+    kind = draw(st.sampled_from(["box", "collinear", "outside", "inside",
+                                 "star"]))
+    if kind == "star":
+        return draw(simple_polygons())
+    if kind == "inside":
+        ring, cx, cy = draw(star_polygons())
+        return (ring - [cx, cy]) * 0.001 + clip.mean(axis=0)
+    x0, y0 = draw(small), draw(small)
+    x1, y1 = x0 + draw(st.integers(1, 8)), y0 + draw(st.integers(1, 8))
+    ring = _box_ring(x0, y0, x1, y1)
+    if kind == "outside":
+        ring = ring + 100.0
+    if kind == "collinear":
+        mid = (ring + np.roll(ring, -1, axis=0)) / 2.0
+        ring = np.stack([ring, mid], axis=1).reshape(-1, 2)
+    return ring
+
+
+@st.composite
+def sh_batches(draw):
+    """N (subject, clip) cases sharing one clip vertex count: integer
+    boxes (C=4) or buffer 16-gons, each clip CCW or CW."""
+    n = draw(st.integers(min_value=1, max_value=6))
+    boxes = draw(st.booleans())
+    subjects, clips = [], []
+    for _ in range(n):
+        if boxes:
+            x0, y0 = draw(small), draw(small)
+            clip = _box_ring(x0, y0, x0 + draw(st.integers(1, 8)),
+                             y0 + draw(st.integers(1, 8)))
+        else:
+            clip = geometry.buffer_point(draw(coords) / 10,
+                                         draw(coords) / 10,
+                                         draw(st.floats(0.5, 10)))
+        subjects.append(draw(sh_subjects(clip)))
+        clips.append(clip[::-1] if draw(st.booleans()) else clip)
+    return subjects, np.stack(clips)
+
+
+@given(sh_batches())
+def test_batched_clip_matches_scalar_sh_bitwise(batch):
+    subjects, clips = batch
+    verts, counts = geometry.clip_rings_to_convex(
+        *geometry.pad_rings(subjects), clips)
+    for i, (subject, clip) in enumerate(zip(subjects, clips)):
+        want = _sh_scalar(subject, clip)
+        got = verts[i, :counts[i]]
+        assert got.shape == want.shape
+        assert np.array_equal(got, want)   # bit for bit, not approx
+        # the single-ring entry point is the N=1 case of the batch
+        single = geometry.clip_ring_to_convex(subject, clip)
+        assert single.shape[0] == want.shape[0]
+        assert np.array_equal(single.reshape(-1, 2), want)
+
+
+# --- batched zonal pixel mask ----------------------------------------------
+
+@st.composite
+def lattice_windows(draw):
+    """Windows of a 25 m pixel grid with zones whose vertices sit on
+    pixel centres (so edges run through centres and rows of centres
+    lie on horizontal edges): single rings (possibly self-crossing),
+    holed polygons and two-part multipolygons, some zones over two
+    windows."""
+    px = 25.0
+
+    def ring(x0, y0):
+        k = draw(st.integers(min_value=3, max_value=9))
+        ij = draw(st.lists(st.tuples(st.integers(-1, 8), st.integers(-1, 8)),
+                           min_size=k, max_size=k))
+        return [(x0 + (i + 0.5) * px, y0 + (j + 0.5) * px) for i, j in ij]
+
+    def body(r):
+        r = r + r[:1]
+        return "(" + ", ".join(f"{x!r} {y!r}" for x, y in r) + ")"
+
+    rows = []
+    for _ in range(draw(st.integers(min_value=1, max_value=5))):
+        x0 = draw(st.integers(0, 4)) * px
+        y0 = draw(st.integers(0, 4)) * px
+        kind = draw(st.sampled_from(["ring", "ring", "holed", "multi"]))
+        if kind == "ring":
+            wkt = f"POLYGON ({body(ring(x0, y0))})"
+        elif kind == "holed":
+            wkt = f"POLYGON ({body(ring(x0, y0))}, {body(ring(x0, y0))})"
+        else:
+            wkt = (f"MULTIPOLYGON (({body(ring(x0, y0))}), "
+                   f"({body(ring(x0, y0))}))")
+        for _ in range(draw(st.integers(1, 2))):
+            rows.append((wkt, x0 + draw(st.integers(-2, 2)) * px,
+                         y0 + draw(st.integers(-2, 2)) * px,
+                         draw(st.integers(0, 9)), draw(st.integers(0, 9)),
+                         px))
+    return pd.DataFrame(rows, columns=["wkt", "x0", "y0", "nrows",
+                                       "ncols", "pixel_m"])
+
+
+@given(lattice_windows())
+def test_batched_zonal_mask_matches_points_in_geom(w):
+    from balrog_spark import zonal
+    got = zonal._window_masks(w)
+    off = 0
+    for r in w.itertuples():
+        n, m = r.nrows, r.ncols
+        xs = r.x0 + (np.arange(m) + 0.5) * r.pixel_m
+        ys = r.y0 + (n - np.arange(n) - 0.5) * r.pixel_m
+        gx = np.broadcast_to(xs[None, :], (n, m)).ravel()
+        gy = np.broadcast_to(ys[:, None], (n, m)).ravel()
+        want = geometry.points_in_geom(gx, gy,
+                                       geometry.parse_wkt_polys(r.wkt))
+        assert np.array_equal(got[off:off + n * m], want)
+        off += n * m
+    assert off == len(got)

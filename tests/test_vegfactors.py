@@ -276,3 +276,90 @@ def test_veg_factors_concave_disconnected_clip(spark):
         & geometry.points_in_geom(px, py, [[buf]])
     # WKT coords are rounded to 1e-6 -> allow a vanishing boundary band
     assert (got_in != want_in).mean() < 2e-3
+
+
+def _mixed_world(spark):
+    """Every refine and zonal-mask path in one Arrow batch and one batch
+    cell: convex boxes and a two-part MULTIPOLYGON veg (batched SH clip,
+    single-ring zones: batched mask), a concave U whose clip is
+    disconnected and a holed polygon straddling a tile edge (slab clip,
+    MULTIPOLYGON zones: per-window mask)."""
+    pts = [("q_box", 300.0, 300.0), ("q_multi", 700.0, 300.0),
+           ("q_u", 1100.0, 230.0), ("q_hole", 1600.0, 300.0)]
+    polys = [
+        ("box1", 1, _box_wkt(230, 250, 290, 330)),
+        ("box2", 2, _box_wkt(320, 200, 420, 280)),
+        ("mp", 3, "MULTIPOLYGON (((620 260, 680 260, 680 340, 620 340, "
+                  "620 260)), ((720 280, 790 280, 790 320, 720 320, "
+                  "720 280)))"),
+        ("U", 4, "POLYGON ((1060 260, 1080 260, 1080 500, 1120 500, "
+                 "1120 260, 1140 260, 1140 540, 1060 540, 1060 260))"),
+        ("H", 5, "POLYGON ((1520 220, 1680 220, 1680 380, 1520 380, "
+                 "1520 220), (1580 280, 1620 280, 1620 320, 1580 320, "
+                 "1580 280))"),
+    ]
+    return (spark.createDataFrame(
+                pd.DataFrame(pts, columns=["addr_id", "x", "y"])),
+            spark.createDataFrame(
+                pd.DataFrame(polys, columns=["veg_id", "bal_number",
+                                             "wkt"])))
+
+
+def _mixed_rows(spark):
+    """veg_factors -> per-clip zonal_stats_poly over dem + veg tiles,
+    the flagship_veg_factors chain; one tuple per clip row."""
+    import hashlib
+    sp, sv = _mixed_world(spark)
+    vf = vegfactors.veg_factors(sp, sv, RADIUS).localCheckpoint()
+    zones = vf.select(
+        F.concat_ws("|", "addr_id", "veg_id", "part_idx").alias("zone_id"),
+        F.col("clip_wkt").alias("wkt"), "xmin", "ymin", "xmax", "ymax")
+    tiles = corpus.spark_tiles(spark, NX, NY, layers=("dem", "veg"))
+    z = zonal.zonal_stats_poly(
+        zones, tiles, {"dem": {"circular": False},
+                       "veg": {"circular": True}}, batch_m=1e6)
+    stats = [f"{lay}_{s}" for lay in ("dem", "veg")
+             for s in ("min", "max", "avg", "std", "med", "pixel_count")]
+    out = vf.withColumn("zone_id", F.concat_ws(
+        "|", "addr_id", "veg_id", "part_idx")).join(z, "zone_id")
+    return sorted(
+        (r.zone_id, r.clip_wkt.split(" ")[0],
+         hashlib.md5(r.clip_wkt.encode()).hexdigest()[:12],
+         r.area_m2, r.distance_m, r.azimuth_deg,
+         tuple(r[s] for s in stats)) for r in out.collect())
+
+
+# pinned from the per-pair clip and per-row mask implementation this
+# batched one replaced: vertices, areas and pixel sets are bit-identical
+MIXED_ROWS = [
+    ('q_box|box1|0', 'POLYGON', 'c5a4fa046949',
+     4800.0, 10.0, -90.0,
+     (376, 384, 381, 2, 381, 9, 12, 12, 12, 0, 12, 9)),
+    ('q_box|box2|0', 'POLYGON', '837bd39d92ef',
+     4133.233594253688, 28.284271247461902, 135.0,
+     (383, 386, 384, 1, 384, 6, 12, 12, 12, 0, 12, 6)),
+    ('q_hole|H|0', 'MULTIPOLYGON', 'f2d9115c43b1',
+     23138.25656518538, 20.0, 180.0,
+     (273, 310, 287, 9, 287, 32, 10, 18, 14, 4, 14, 32)),
+    ('q_multi|mp|0', 'POLYGON', '2d68f29acfde',
+     4800.0, 20.0, -90.0,
+     (405, 413, 409, 2, 410, 8, 99, 99, 99, 0, 99, 8)),
+    ('q_multi|mp|1', 'POLYGON', '05ea7d083249',
+     2800.0, 20.0, 90.0,
+     (427, 439, 433, 4, 433, 6, 99, 99, 99, 0, 99, 6)),
+    ('q_u|U|0', 'MULTIPOLYGON', 'bfc471524d83',
+     2559.898000812391, 36.05551275463989, -33.69006752597979,
+     (430, 461, 445, 10, 444, 6, 5, 5, 5, 0, 5, 6)),
+]
+
+
+@pytest.mark.parametrize("one_partition", [True, False])
+def test_veg_factors_mixed_paths_pinned(spark, one_partition, monkeypatch):
+    from pyspark import SparkContext
+    if one_partition:
+        monkeypatch.setattr(SparkContext, "defaultParallelism",
+                            property(lambda self: 1))
+    got = _mixed_rows(spark)
+    # both clip paths and both mask paths fired
+    assert {g[1] for g in got} == {"POLYGON", "MULTIPOLYGON"}
+    assert got == MIXED_ROWS
